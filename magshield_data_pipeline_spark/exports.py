@@ -11,8 +11,9 @@ lookup join as an in-memory dict probe
 (/root/reference/modules/opportunity.py:128-147), which is only sound
 because its dims (users, organisations, stages, …) are
 dimension-sized. Each join-bearing export takes ``broadcast_dims``
-(default True = reference-faithful: dims fit one executor, plans are
-exchange-free except the final dropDuplicates). Callers whose "dim"
+(default True = reference-faithful: dims fit one executor, so the dim
+joins do not shuffle; the per-parent groupBys and the final
+dropDuplicates still exchange). Callers whose "dim"
 inputs scale with the fact side — e.g. the oracle-parity registry
 queries, which derive dims from customer/supplier frames that grow
 with SF — MUST pass ``broadcast_dims=False``; the joins then carry no

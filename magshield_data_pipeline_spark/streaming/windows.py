@@ -130,11 +130,15 @@ def run_available_now(
     operator — for the stream-stream inner interval join it was ~half
     the query's addBatch time). ONLY safe for queries whose output is
     fully emitted by the data batches themselves: an inner join emits
-    matches as they are seen, and a complete-mode aggregate's final
-    emission is identical with no new data. Queries whose EMISSION
-    depends on the watermark advancing past event time — outer-join
-    null rows, append-mode window finalization, EventTimeTimeout
-    flushes (sessionizer, funnel) — MUST keep the default.
+    matches as they are seen, streaming dedup emits each key on first
+    sight, and a complete-mode aggregate's final emission is identical
+    with no new data. Queries whose EMISSION depends on the watermark
+    advancing past event time — outer-join null rows, append-mode
+    window finalization, EventTimeTimeout flushes — MUST keep the
+    default. Two EventTimeTimeout callers opt out only because their
+    timeout cannot emit within the drain: ``stateful_sessionizer``
+    (3650-day watermark delay) and ``streaming_funnel_progress`` (its
+    timeout evicts without emitting).
 
     NOTE the memory sink does NOT support checkpoint recovery (Spark
     refuses at start) — this runner is for parity checks and

@@ -107,3 +107,26 @@ def test_memo_stamp_guards_recreated_table(spark, tmp_path):
     fresh = SN.read(spark, t, 1)
     assert fresh is not first, "recreated table served a stale plan"
     assert fresh.count() == 7
+
+
+def test_export_passes_reuse_generated_classes(spark, tmp_path):
+    # a pass of the six exports needs ~138 whole-stage-codegen classes;
+    # in Spark's default cache of 100 a repeat pass recompiled ~125
+    from magshield_data_pipeline_spark import sinks
+    from magshield_data_pipeline_spark.plans.registry import QUERY_REGISTRY
+
+    names = [n for n in QUERY_REGISTRY if n.endswith("_export_pipeline")]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    assert len(names) == 6
+
+    def export_pass():
+        for name in names:
+            df = QUERY_REGISTRY[name].fn(spark, SF_SMALL)
+            sinks.overwrite_by_name(df, str(tmp_path), name)
+
+    export_pass()
+    before = compiles.getCount()
+    export_pass()
+    recompiled = compiles.getCount() - before
+    assert recompiled <= 10, f"second export pass compiled {recompiled} classes"
